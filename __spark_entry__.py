@@ -352,7 +352,7 @@ def q_kg_sql_triples(spark, sf_dir):
     → canonical rewrite (broadcast alias map) → per-triple context count."""
     from graphrag_rs_spark.stages.canonicalize import rewrite_triple_mentions
     tm, _, cmap = _kg_sql_parts(spark, sf_dir)
-    rewritten = rewrite_triple_mentions(tm, cmap)
+    rewritten = rewrite_triple_mentions(tm, cmap).distinct()
     return rewritten.groupBy("subj", "pred", "obj").agg(
         F.count("*").cast("bigint").alias("n_context"))
 

@@ -19,8 +19,10 @@ clustering (string_similarity_linker.rs:68-127):
   4. canonical pick  — max_by(entity_id, struct(confidence, entity_id)) per
                        component (rs:106-117 + deterministic tie-break).
   5. rewrite (L5)    — triples re-pointed through a BROADCAST alias map
-                       (the north rule's hot-alias-dictionary broadcast),
-                       then re-deduplicated (R4).
+                       (the north rule's hot-alias-dictionary broadcast);
+                       the pipeline folds the raw rewritten stream (R4)
+                       and derives the distinct flat form from it
+                       (stages/pipeline.py).
 
 Scale: block sizes are capped (quadratic pair growth inside one block is
 the skew risk); oversized blocks are dropped and counted, never silently.
@@ -226,11 +228,12 @@ def _apply_alias(df: DataFrame, alias_map: DataFrame, col: str) -> DataFrame:
 def rewrite_triple_mentions(triple_mentions: DataFrame,
                             canonical: DataFrame,
                             cfg: PipelineConfig = DEFAULT_CONFIG,
-                            mention_counts: DataFrame | None = None,
-                            dedup: bool = True) -> DataFrame:
+                            mention_counts: DataFrame | None = None
+                            ) -> DataFrame:
     """L5 on the FLAT form: re-point (chunk_id, subj, pred, obj) endpoints
-    through the alias map, dedup rows that collapse onto the same
-    canonical triple.
+    through the alias map.  Rows that collapse onto the same canonical
+    triple are kept: the context fold's `collect_set` ignores them, and
+    callers needing the distinct flat form apply `.distinct()`.
 
     The broadcast is CAPPED (the north rule's "hot alias dictionary"):
     when the non-identity alias map fits in `cfg.alias_broadcast_hot_k`
@@ -246,15 +249,6 @@ def rewrite_triple_mentions(triple_mentions: DataFrame,
 
     Identity rows may be omitted from `canonical`.  Stays codegen-only —
     no object aggregation here (see triples.triples_with_context).
-
-    `dedup=False` skips the trailing repartition+distinct and returns the
-    alias-applied stream as-is.  Use it when the consumer is the context
-    fold: `collect_set(chunk_key)` per (subj, pred, obj) group already
-    ignores duplicate rows, so folding the raw stream yields the exact
-    same canonical_triples while paying ONE shuffle of the 10⁷-row
-    stream instead of two (measured 105s → 40s at 2.16M turns/local[16]
-    for rewrite→fold).  Flat-table consumers need dedup=True — the flat
-    form's contract is distinct rows.
     """
     aliases = canonical.filter(
         F.col("entity_id") != F.col("canonical_id")) \
@@ -287,16 +281,4 @@ def rewrite_triple_mentions(triple_mentions: DataFrame,
                        hot, "obj")
     if cold is not None:
         out = _apply_alias(_apply_alias(out, cold, "subj"), cold, "obj")
-    if not dedup:
-        return out.select("chunk_id", "subj", "pred", "obj")
-    return (
-        out.select("chunk_id", "subj", "pred", "obj")
-        # repartition on (a subset of) the dedup key BEFORE distinct:
-        # without it every map task's partial aggregate accumulates a
-        # hash map over the full row stream, and aggregate memory ∝
-        # rows × concurrent tasks — measured 72s at 16 threads vs 15s
-        # at 4 on 16.7M rows (GC collapse).  Co-partitioned, each task
-        # holds only its own groups: 16 cores beat 4 again.
-        .repartition(cfg.shuffle_partitions, "subj", "obj")
-        .distinct()
-    )
+    return out.select("chunk_id", "subj", "pred", "obj")

@@ -1,8 +1,9 @@
 """Stage 2 — pattern entity/mention extraction (E1-E7) as one Arrow UDF.
 
-One mapInPandas pass over chunks emits one row per (chunk, entity) with
-the mention list nested; `entities_table` / `mentions_table` then derive
-the normalized tables with plain aggregations:
+One mapInPandas pass over chunks emits one row per chunk with its
+entities (mention lists nested) as an array; `chunk_entities_from_bundles`
+explodes it to one row per (chunk, entity), from which `entities_table` /
+`mentions_table` derive the normalized tables with plain aggregations:
 
   per-chunk dedup (E4)  — already done inside the extractor
   per-graph dedup (E5)  — groupBy(entity_id).agg(max(confidence), ...)
@@ -28,61 +29,20 @@ from pyspark.sql import DataFrame, functions as F
 from graphrag_rs_spark.config import PipelineConfig, DEFAULT_CONFIG
 from graphrag_rs_spark import reference_logic as rl
 
-CHUNK_ENTITY_SCHEMA = (
-    "chunk_id string, doc_id string, entity_id string, name string, "
-    "entity_type string, confidence double, "
-    "mention_starts array<long>, mention_ends array<long>, first_offset long"
-)
-
 
 def extract_chunk_entities(
     chunks: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """chunks → one row per (chunk_id, entity), deterministic order fields.
+    """chunks → one row per (chunk_id, entity), deterministic order fields:
+    the bundle extraction, exploded.
 
     `first_offset` (min mention start) carries the deterministic pair
     ordering downstream (SURVEY.md §7 risk 3).
     """
-    entity_types = tuple(cfg.entity_types)
-    min_confidence = cfg.min_confidence
-
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "chunk_id", "doc_id", "entity_id", "name", "entity_type",
-                "confidence", "mention_starts", "mention_ends",
-                "first_offset")}
-            for chunk_id, doc_id, content in zip(
-                    pdf["chunk_id"], pdf["doc_id"], pdf["content"]):
-                for e in rl.extract_from_chunk(content, entity_types,
-                                               min_confidence):
-                    out["chunk_id"].append(chunk_id)
-                    out["doc_id"].append(doc_id)
-                    out["entity_id"].append(e.entity_id)
-                    out["name"].append(e.name)
-                    out["entity_type"].append(e.entity_type)
-                    out["confidence"].append(e.confidence)
-                    out["mention_starts"].append([m.start for m in e.mentions])
-                    out["mention_ends"].append([m.end for m in e.mentions])
-                    out["first_offset"].append(
-                        min((m.start for m in e.mentions), default=1 << 60))
-            if out["chunk_id"]:  # empty frames break Arrow list-column typing
-                yield pd.DataFrame(out)
-
-    src = chunks.select("chunk_id", "doc_id", "content")
-    if num_partitions:
-        src = src.repartition(num_partitions)
-    out = src.mapInPandas(extract_batches, schema=CHUNK_ENTITY_SCHEMA)
-    # E6 allow/exclude name filters — declarative rlike, not inside the
-    # UDF, so the whole-stage-codegen filter prunes rows before any
-    # downstream shuffle
-    if cfg.include_name_pattern:
-        out = out.filter(F.col("name").rlike(cfg.include_name_pattern))
-    for pat in cfg.exclude_name_patterns:
-        out = out.filter(~F.col("name").rlike(pat))
-    return out
+    return chunk_entities_from_bundles(
+        extract_chunk_bundles(chunks, cfg, num_partitions))
 
 
 ENTITY_STRUCT = (
@@ -112,7 +72,7 @@ def extract_chunk_bundles(
 
     E6 allow/exclude filters apply to the ARRAY here (order-preserving
     F.filter), so every consumer — entity/mention tables and pairs —
-    sees the same filtered view, exactly like the exploded path.
+    sees the same filtered view.
     """
     entity_types = tuple(cfg.entity_types)
     min_confidence = cfg.min_confidence
@@ -168,9 +128,8 @@ def extract_chunk_bundles(
 
 
 def chunk_entities_from_bundles(bundles: DataFrame) -> DataFrame:
-    """Bundle rows → the classic exploded chunk_entities table
-    (CHUNK_ENTITY_SCHEMA, one row per (chunk, entity)) — a pure
-    map-side explode, no shuffle."""
+    """Bundle rows → the exploded chunk_entities table, one row per
+    (chunk, entity) — a pure map-side explode, no shuffle."""
     e = bundles.select("chunk_id", "doc_id", F.explode("ents").alias("e"))
     return e.select(
         "chunk_id", "doc_id", "e.entity_id", "e.name", "e.entity_type",

@@ -42,19 +42,19 @@ _CONTEXT_KEYWORDS = {
 }
 
 
-def chunk_context_flags(chunks: DataFrame) -> DataFrame:
-    """Per-chunk boolean flags for the predicate rule table (JVM contains)."""
-    cols = [F.col("content").contains(kw).alias(name)
-            for name, kw in _CONTEXT_KEYWORDS.items()]
-    return chunks.select("chunk_id", *cols)
-
-
 def context_flag_columns() -> dict[str, F.Column]:
-    """The same flags as named Column expressions over a `content` column
-    — for passthrough into `extraction.extract_chunk_bundles`, so the
-    pair stage never joins the chunk text back."""
+    """Per-chunk boolean flags for the predicate rule table (JVM contains)
+    as named Column expressions over a `content` column — for passthrough
+    into `extraction.extract_chunk_bundles`, so the pair stage never
+    joins the chunk text back."""
     return {name: F.col("content").contains(kw)
             for name, kw in _CONTEXT_KEYWORDS.items()}
+
+
+def chunk_context_flags(chunks: DataFrame) -> DataFrame:
+    """(chunk_id, kw_* flags) for the self-join emitter."""
+    return chunks.select(
+        "chunk_id", *[c.alias(n) for n, c in context_flag_columns().items()])
 
 
 def _pred_expr() -> F.Column:

@@ -2,18 +2,32 @@
 outputs; lineage table carries per-partition rows + checksums."""
 
 import os
+from dataclasses import fields
 
 import pytest
 from pyspark.sql import functions as F
 
 from graphrag_rs_spark.config import DEFAULT_CONFIG
 from graphrag_rs_spark.stages.checkpoint import CheckpointManager
-from graphrag_rs_spark.stages.pipeline import run_pipeline_checkpointed
+from graphrag_rs_spark.stages.pipeline import (
+    PipelineResult, run_pipeline, run_pipeline_checkpointed)
 
 
 def _triples(res):
     return {(r["subj"], r["pred"], r["obj"])
             for r in res.canonical_triples.collect()}
+
+
+def _table_sums(res):
+    """(rows, bit_xor of row hashes) of each of the 13 result tables."""
+    out = {}
+    for f in fields(PipelineResult):
+        df = getattr(res, f.name)
+        h = F.expr("bit_xor(xxhash64("
+                   + ", ".join(f"`{c}`" for c in df.columns) + "))")
+        r = df.agg(F.count(F.lit(1)), F.coalesce(h, F.lit(0))).collect()[0]
+        out[f.name] = (r[0], r[1])
+    return out
 
 
 def test_checkpointed_run_and_resume(spark, tiny_transcripts, tiny_oracle, tmp_path):
@@ -38,6 +52,10 @@ def test_checkpointed_run_and_resume(spark, tiny_transcripts, tiny_oracle, tmp_p
             .join(ck.filter(F.col("partition_id") == -1)
                   .select("stage", F.col("rows").alias("total")), "stage"))
     assert sums.filter(F.col("s") != F.col("total")).count() == 0
+
+    # both runners execute the one stage list: identical tables
+    assert _table_sums(res1) == _table_sums(
+        run_pipeline(spark, tiny_transcripts))
 
 
 def test_resume_after_partial_failure(spark, tiny_transcripts, tiny_oracle, tmp_path):

@@ -188,10 +188,8 @@ def test_fold_over_raw_rewrite_equals_fold_over_distinct(result):
     from graphrag_rs_spark.stages import canonicalize
     from graphrag_rs_spark.stages import triples as tmod
     raw = canonicalize.rewrite_triple_mentions(
-        result.triple_mentions, result.canonical_map, DEFAULT_CONFIG,
-        dedup=False)
-    deduped = canonicalize.rewrite_triple_mentions(
         result.triple_mentions, result.canonical_map, DEFAULT_CONFIG)
+    deduped = raw.distinct()
     a = sorted(map(tuple, tmod.triples_with_context(raw,
                DEFAULT_CONFIG).collect()))
     b = sorted(map(tuple, tmod.triples_with_context(deduped,

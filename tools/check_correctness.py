@@ -9,10 +9,11 @@ values (stringified, floats pre-rounded by the queries themselves).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def normalize(rows, cols):
