@@ -2456,8 +2456,10 @@ def q_checkpoint_lineage(spark, sf_dir):
 
     from graphrag_rs_spark.stages.checkpoint import CheckpointManager
 
+    # per-process: a concurrent driver's wipe cannot hit this workdir
     wd = os.path.join(tempfile.gettempdir(),
-                      "grs_ckpt_contract_" + _re.sub(r"\W", "_", sf_dir))
+                      f"grs_ckpt_contract_{os.getpid()}_"
+                      + _re.sub(r"\W", "_", sf_dir))
     shutil.rmtree(wd, ignore_errors=True)
     d = _docs(spark, sf_dir)
 

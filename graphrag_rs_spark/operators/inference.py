@@ -181,9 +181,11 @@ def infer_relationships(
     spark = chunks.sparkSession
     tdf = spark.createDataFrame([(t,) for t in targets], "target_id string")
 
-    # distinct: the reference's chunk.entities is a HashSet
-    # (inference.rs:120) — duplicate (chunk_id, entity_id) rows would
-    # inflate both the evidence sums and the n_chunks denominator
+    # distinct: the reference's chunk.entities is a Vec (core/mod.rs:219),
+    # but entity/mod.rs extract_from_chunk fills it after its per-chunk
+    # deduplicate_entities call (keyed (name, type)), so it holds each
+    # entity once — duplicate (chunk_id, entity_id) rows would inflate
+    # both the evidence sums and the n_chunks denominator
     ce = chunk_entities.select("chunk_id", "entity_id").distinct()
     # chunks containing a target: tiny (|targets| × their chunk count)
     tc = ce.join(F.broadcast(tdf),

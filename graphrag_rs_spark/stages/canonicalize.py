@@ -10,9 +10,13 @@ clustering (string_similarity_linker.rs:68-127):
                        assumed below τ (documented approximation; the
                        synthetic + reference probe pairs all share a token).
   2. pair scoring    — compute_similarity (max of levenshtein / jaro-winkler
-                       / jaccard, rs:130-168) as an Arrow-batched pandas UDF
-                       over DISTINCT (name1, name2) pairs.
-  3. closure         — τ-filtered similarity edges → small-star/large-star
+                       / jaccard, rs:130-168) in an Arrow-batched pandas
+                       UDF, filter then verify: a numpy upper bound over
+                       per-name features (`SimilarityBound`) drops every
+                       pair that cannot reach τ, and the exact reference
+                       score runs only on the rest.  Only edges (sim ≥ τ)
+                       leave the stage.
+  3. closure         — the similarity edges → small-star/large-star
                        connected components (algos.cc).  CC is the
                        order-independent closure of the reference's greedy
                        seed clustering at the same threshold (SURVEY.md §7).
@@ -32,6 +36,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
@@ -133,28 +138,127 @@ def candidate_pairs(entities: DataFrame,
     return pairs
 
 
-def score_pairs(pairs: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Similarity over distinct name pairs (Arrow-batched), joined back."""
-    distinct_names = pairs.select("name1", "name2").distinct()
+# Per-name feature row layout for SimilarityBound: normalized length,
+# interned codes of the normalized string / token set / soundex, token
+# count, the first 4 code points (-1 past the end), then character counts
+# over a-z0-9 and space plus ONE bucket for everything else.  Pooling the
+# rest keeps Σ min(count1, count2) an upper bound on matchable characters.
+_ALPHABET = "abcdefghijklmnopqrstuvwxyz0123456789 "
+_SLOT = {c: i for i, c in enumerate(_ALPHABET)}
+_LEN, _NORM, _TOKSET, _SOUNDEX, _NTOK, _PREFIX = 0, 1, 2, 3, 4, 5
+_COUNTS = _PREFIX + 4
+_WIDTH = _COUNTS + len(_ALPHABET) + 1
+_BOUND_EPS = 1e-9   # the bound and the exact score sum in different orders
 
+
+class SimilarityBound:
+    """Vectorized upper bound on `rl.compute_similarity(n1, n2,
+    use_phonetic=…, max_edit_distance=…)` (same_type pairs) over arrays of
+    raw names.  Features are computed once per distinct name and memoized
+    across calls, so one instance serves a whole mapInPandas partition.
+
+    With m = Σ min(count1, count2) over the character buckets, an upper
+    bound on the characters any alignment can match:
+      - jaro ≤ (m/l1 + m/l2 + 1)/3 (0 when m = 0), and Jaro-Winkler is
+        monotone in jaro for the actual common prefix p ≤ 4;
+      - edit distance d ≥ max(|l1 − l2|, max(l1, l2) − m), and
+        levenshtein_similarity is 0 once that exceeds max_edit_distance;
+      - Jaccard is 1 on equal token sets, else at most (a−1)/(a+1) for
+        equal set sizes a and min/max for unequal ones;
+      - the phonetic term is exact (0.9 on equal soundex codes).
+    Equal normalized names bound at exactly 1.0 (their score); a pair
+    with an empty normalized name bounds at +inf (always scored exactly).
+    """
+
+    def __init__(self, use_phonetic: bool = False, max_edit_distance: int = 2):
+        self.use_phonetic = use_phonetic
+        self.max_edit_distance = max_edit_distance
+        self._memo: dict[str, list[int]] = {}
+        self._codes: tuple[dict, dict, dict] = ({}, {}, {})
+
+    def _features(self, name: str) -> list[int]:
+        norm = rl.normalize_string(name)
+        tokens = frozenset(norm.split())
+        sx = rl.soundex(norm) if self.use_phonetic else ""
+        norms, toksets, soundexes = self._codes
+        counts = [0] * (_WIDTH - _COUNTS)
+        for c in norm:
+            counts[_SLOT.get(c, len(_ALPHABET))] += 1
+        prefix = [ord(c) for c in norm[:4]] + [-1] * (4 - len(norm[:4]))
+        return [len(norm), norms.setdefault(norm, len(norms)),
+                toksets.setdefault(tokens, len(toksets)),
+                soundexes.setdefault(sx, len(soundexes)),
+                len(tokens), *prefix, *counts]
+
+    def _gather(self, names: np.ndarray) -> np.ndarray:
+        """Feature rows for `names`, computing each new name once."""
+        codes, uniques = pd.factorize(names)
+        memo = self._memo
+        for name in uniques:
+            if name not in memo:
+                memo[name] = self._features(name)
+        table = np.array([memo[name] for name in uniques], np.int64)
+        return table.reshape(len(uniques), _WIDTH)[codes]
+
+    def upper_bound(self, names1, names2) -> np.ndarray:
+        n = len(names1)
+        f = self._gather(np.concatenate([np.asarray(names1, object),
+                                         np.asarray(names2, object)]))
+        a, b = f[:n], f[n:]
+        l1, l2 = a[:, _LEN], b[:, _LEN]
+        m = np.minimum(a[:, _COUNTS:], b[:, _COUNTS:]).sum(axis=1)
+        longest = np.maximum(l1, l2)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            jaro = np.where(m > 0, (m / l1 + m / l2 + 1.0) / 3.0, 0.0)
+            p = np.cumprod((a[:, _PREFIX:_COUNTS] == b[:, _PREFIX:_COUNTS])
+                           & (a[:, _PREFIX:_COUNTS] >= 0), axis=1).sum(axis=1)
+            bound = jaro + p * 0.1 * (1.0 - jaro)
+            d = np.maximum(np.abs(l1 - l2), longest - m)
+            bound = np.maximum(bound, np.where(
+                d <= self.max_edit_distance, 1.0 - d / longest, 0.0))
+            t1, t2 = a[:, _NTOK], b[:, _NTOK]
+            jaccard = np.where(
+                a[:, _TOKSET] == b[:, _TOKSET], 1.0,
+                np.where(t1 == t2, (t1 - 1) / (t1 + 1),
+                         np.minimum(t1, t2) / np.maximum(t1, t2)))
+        bound = np.maximum(bound, jaccard)
+        if self.use_phonetic:
+            bound = np.maximum(
+                bound, np.where(a[:, _SOUNDEX] == b[:, _SOUNDEX], 0.9, 0.0))
+        bound = np.where(a[:, _NORM] == b[:, _NORM], 1.0, bound)
+        return np.where((l1 == 0) | (l2 == 0), np.inf, bound)
+
+
+def score_pairs(pairs: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """→ (id1, id2, sim) for exactly the candidate pairs whose
+    compute_similarity reaches `cfg.link_min_similarity`, with the exact
+    reference `sim`; pairs below τ are not returned.
+
+    One Arrow-batched pass over the pairs: `SimilarityBound` prunes each
+    batch in numpy (name features memoized per partition), and only the
+    pairs whose bound reaches τ run the per-pair reference score.
+    """
     use_phonetic = cfg.link_use_phonetic
     max_ed = cfg.link_max_edit_distance
+    tau = float(cfg.link_min_similarity)
 
     def sim_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bound = SimilarityBound(use_phonetic, max_ed)   # one memo per partition
         for pdf in batches:
-            pdf = pdf.copy()
-            pdf["sim"] = [
+            pdf = pdf[bound.upper_bound(pdf["name1"], pdf["name2"])
+                      >= tau - _BOUND_EPS]
+            sim = np.array([
                 rl.compute_similarity(n1, n2, same_type=True,
                                       use_phonetic=use_phonetic,
                                       max_edit_distance=max_ed)
                 for n1, n2 in zip(pdf["name1"], pdf["name2"])
-            ]
-            yield pdf
+            ], dtype=np.float64)
+            out = pdf.assign(sim=sim)[sim >= tau]
+            if len(out):
+                yield out[["id1", "id2", "sim"]]
 
-    scored = distinct_names.mapInPandas(
-        sim_batches, schema="name1 string, name2 string, sim double")
-    return pairs.join(scored, ["name1", "name2"]).select(
-        "id1", "id2", "sim")
+    return pairs.select("id1", "id2", "name1", "name2").mapInPandas(
+        sim_batches, schema="id1 string, id2 string, sim double")
 
 
 def canonical_map(
@@ -172,11 +276,8 @@ def canonical_map(
     shares a `shared_blocked_keys` frame with `dropped_block_stats`.
     """
     pairs = candidate_pairs(entities, keyed=keyed)
-    edges = (
-        score_pairs(pairs, cfg)
-        .filter(F.col("sim") >= F.lit(float(cfg.link_min_similarity)))
-        .select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    )
+    edges = score_pairs(pairs, cfg).select(
+        F.col("id1").alias("src"), F.col("id2").alias("dst"))
     if extra_edges is not None:
         edges = edges.union(extra_edges.select("src", "dst"))
     return canonical_from_edges(entities, edges, cfg)
