@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from graphrag_rs_spark.config import PipelineConfig, DEFAULT_CONFIG
 from graphrag_rs_spark import reference_logic as rl
+from graphrag_rs_spark.stages.triples import context_flag_columns
 
 
 def extract_chunk_entities(
@@ -56,19 +57,18 @@ def extract_chunk_bundles(
     chunks: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     num_partitions: int | None = None,
-    extra: dict[str, F.Column] | None = None,
 ) -> DataFrame:
     """chunks → ONE row per chunk: (chunk_id, doc_id, ents: array<struct>,
-    *extra passthrough columns).
+    kw_* predicate context flags).
 
     The per-chunk array keeps extract_from_chunk's deterministic
     (first_offset, entity_id) order, which makes downstream pair
     emission a map-side array expansion instead of a self-join — the
     bundle form exists so the triple stage needs NO shuffle at all
-    (triples.emit_triple_mentions_from_bundles).  `extra` columns
-    (e.g. the predicate-rule context flags) are computed JVM-side from
-    the chunk row and ride through the Arrow batch untouched, avoiding a
-    join to get them back beside the pairs.
+    (triples.emit_triple_mentions_from_bundles).  The 13 boolean flags
+    of `triples.context_flag_columns()` are always present: computed
+    JVM-side from the chunk row, they ride through the Arrow batch
+    untouched, avoiding a join to get them back beside the pairs.
 
     E6 allow/exclude filters apply to the ARRAY here (order-preserving
     F.filter), so every consumer — entity/mention tables and pairs —
@@ -76,16 +76,13 @@ def extract_chunk_bundles(
     """
     entity_types = tuple(cfg.entity_types)
     min_confidence = cfg.min_confidence
-    extra = extra or {}
-    extra_names = list(extra)
+    flag_cols = context_flag_columns()
+    flags = list(flag_cols)     # names only: the UDF closure is pickled
     schema = (f"chunk_id string, doc_id string, "
-              f"ents array<struct<{ENTITY_STRUCT}>>")
+              f"ents array<struct<{ENTITY_STRUCT}>>, "
+              + ", ".join(f"{n} boolean" for n in flags))
     src = chunks.select("chunk_id", "doc_id", "content",
-                        *[c.alias(n) for n, c in extra.items()])
-    if extra_names:
-        schema += ", " + ", ".join(
-            f"{n} {src.schema[n].dataType.simpleString()}"
-            for n in extra_names)
+                        *[c.alias(n) for n, c in flag_cols.items()])
     if num_partitions:
         src = src.repartition(num_partitions)
 
@@ -110,9 +107,9 @@ def extract_chunk_bundles(
                 ]
                 for content in pdf["content"]
             ]
-            out = pdf[["chunk_id", "doc_id", *extra_names]].copy()
+            out = pdf[["chunk_id", "doc_id", *flags]].copy()
             out["ents"] = ents_col
-            yield out[["chunk_id", "doc_id", "ents", *extra_names]]
+            yield out[["chunk_id", "doc_id", "ents", *flags]]
 
     out = src.mapInPandas(bundle_batches, schema=schema)
     # E6 allow/exclude name filters on the array (JVM, order-preserving)

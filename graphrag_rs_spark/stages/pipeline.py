@@ -124,8 +124,7 @@ STAGES = (
     # join — zero shuffles in the triple stage)
     Stage("chunk_bundles", PERSIST,
           lambda r: extraction.extract_chunk_bundles(
-              r.chunks, r.cfg, r.n,
-              extra=triples_mod.context_flag_columns())),
+              r.chunks, r.cfg, r.n)),
     Stage("chunk_entities", LAZY,
           lambda r: extraction.chunk_entities_from_bundles(r.chunk_bundles)),
     Stage("entities", PERSIST,
@@ -137,7 +136,7 @@ STAGES = (
     # bundles combined (measured)
     Stage("triple_mentions", LAZY,
           lambda r: triples_mod.emit_triple_mentions_from_bundles(
-              r.chunk_bundles, r.cfg)),
+              r.chunk_bundles)),
     Stage("triples", LAZY,
           lambda r: triples_mod.triples_with_context(
               r.triple_mentions, r.cfg)),

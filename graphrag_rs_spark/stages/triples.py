@@ -2,20 +2,18 @@
 
 Pure DataFrame work, no Python in the hot path:
 
-  R1 co-occurrence pairs — self-join of chunk_entities on chunk_id with a
-     deterministic (first_offset, entity_id) ordering predicate; the
-     reference pairs i<j in extraction order (entity/mod.rs:830-843), which
-     is Rust-HashMap-nondeterministic — we pin the order (SURVEY.md §7).
+  R1 co-occurrence pairs — map-side expansion of each chunk's entity
+     array (extraction.extract_chunk_bundles) into position pairs i<j; the
+     array is in (first_offset, entity_id) order.  The reference pairs i<j
+     in extraction order (entity/mod.rs:830-843), which is
+     Rust-HashMap-nondeterministic — we pin the order (SURVEY.md §7).
   R2 predicate typing   — the rule table (entity/mod.rs:851-889) compiled
-     to a when()-chain over pre-computed per-chunk contains() flags, so
-     the full chunk text never rides through the join.
+     to a when()-chain over per-chunk contains() flags that ride in the
+     bundle row, so the full chunk text never reaches the pair stage.
   R3 confidence/context — literals (lib.rs:561-568).
   R4 dedup              — groupBy(subj, pred, obj) + collect_set(context).
-  R5 endpoint validation— inner joins guarantee both endpoints exist.
-
-Skew note: the self-join shuffles on chunk_id; per-chunk entity count is
-bounded by chunk_size, so pair fan-out per key is bounded (~hundreds), no
-salting needed here.  AQE skew-join stays on as a backstop.
+  R5 endpoint validation— both endpoints come from the chunk's own
+     entity array, so every pair endpoint exists.
 """
 
 from __future__ import annotations
@@ -44,17 +42,11 @@ _CONTEXT_KEYWORDS = {
 
 def context_flag_columns() -> dict[str, F.Column]:
     """Per-chunk boolean flags for the predicate rule table (JVM contains)
-    as named Column expressions over a `content` column — for passthrough
-    into `extraction.extract_chunk_bundles`, so the pair stage never
-    joins the chunk text back."""
+    as named Column expressions over a `content` column — every bundle
+    row carries them (`extraction.extract_chunk_bundles`), so the pair
+    stage never joins the chunk text back."""
     return {name: F.col("content").contains(kw)
             for name, kw in _CONTEXT_KEYWORDS.items()}
-
-
-def chunk_context_flags(chunks: DataFrame) -> DataFrame:
-    """(chunk_id, kw_* flags) for the self-join emitter."""
-    return chunks.select(
-        "chunk_id", *[c.alias(n) for n, c in context_flag_columns().items()])
 
 
 def _pred_expr() -> F.Column:
@@ -91,55 +83,16 @@ def _pred_expr() -> F.Column:
     )
 
 
-def emit_triple_mentions(
-    chunk_entities: DataFrame,
-    chunks: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """→ FLAT (chunk_id, subj, pred, obj): one row per co-occurrence.
+def emit_triple_mentions_from_bundles(bundles: DataFrame) -> DataFrame:
+    """→ FLAT (chunk_id, subj, pred, obj): one row per co-occurrence, from
+    per-chunk entity-array bundles (extraction.extract_chunk_bundles),
+    with zero shuffles.
 
-    The flat form stays in whole-stage codegen end-to-end (join + column
-    expressions, no object aggregation); context arrays are folded ONCE
-    at materialization (`triples_with_context`) — collect_set per triple
-    is the single most expensive aggregate in the pipeline, so it must
-    not run once before and once after canonicalization.
-    """
-    # reference pair-loop filter (lib.rs:545-556): only entities with a
-    # verbatim mention in the chunk pair up.  Inputs without a mention
-    # column (e.g. dictionary-NER, where every entity is found by
-    # matching and so always mentioned) skip the filter.
-    if "mention_starts" in chunk_entities.columns:
-        chunk_entities = chunk_entities.filter(
-            F.size("mention_starts") > 0)
-    ce = chunk_entities.select("chunk_id", "entity_id", "entity_type",
-                               "first_offset")
-    a = ce.alias("a")
-    b = ce.alias("b")
-    ordered = (F.col("a.first_offset") < F.col("b.first_offset")) | (
-        (F.col("a.first_offset") == F.col("b.first_offset"))
-        & (F.col("a.entity_id") < F.col("b.entity_id"))
-    )
-    pairs = a.join(b, on=(F.col("a.chunk_id") == F.col("b.chunk_id")) & ordered) \
-        .select(
-            F.col("a.chunk_id").alias("chunk_id"),
-            F.col("a.entity_id").alias("subj"),
-            F.col("a.entity_type").alias("t1"),
-            F.col("b.entity_id").alias("obj"),
-            F.col("b.entity_type").alias("t2"),
-        )
-
-    flags = chunk_context_flags(chunks)
-    return pairs.join(flags, "chunk_id").select(
-        "chunk_id", "subj", _pred_expr().alias("pred"), "obj")
-
-
-def emit_triple_mentions_from_bundles(
-    bundles: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Shuffle-free variant of `emit_triple_mentions` over per-chunk
-    entity-array bundles (extraction.extract_chunk_bundles with
-    `context_flag_columns()` passthrough).
+    The flat form stays in whole-stage codegen end-to-end (generators +
+    column expressions, no object aggregation); context arrays are
+    folded ONCE at materialization (`triples_with_context`) — collect_set
+    per triple is the single most expensive aggregate in the pipeline,
+    so it must not run once before and once after canonicalization.
 
     The bundle array is already in the deterministic (first_offset,
     entity_id) order, so ordered pairs are just position pairs i<j —
@@ -148,11 +101,9 @@ def emit_triple_mentions_from_bundles(
     are interpreted in Spark and would drag the full structs incl.
     mention arrays through O(k²) copies — measured 31s vs 1.3s for this
     codegen form at 33M pairs/253k chunks), then filtered to STRICT key
-    ordering, which is exactly the self-join's predicate (pairs with
-    identical (first_offset, entity_id) are dropped by both).  Replaces
-    the self-join's two sort-merge exchanges plus the flags join with
-    zero shuffles; semantics are row-identical (pinned by
-    tests/test_spark_pipeline.py parity + golden counts).
+    ordering (pairs with identical (first_offset, entity_id) are
+    dropped).  Per-chunk pair emission is checked against the oracle's
+    context chunks in tests/test_spark_pipeline.py.
     """
     # pair only entities with ≥1 verbatim mention in the chunk — the
     # reference filters its pair loop to entities mentioned in the
@@ -190,7 +141,6 @@ def emit_triple_mentions_from_bundles(
 def triples_with_context(
     triple_mentions: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    max_context: int | None = None,
 ) -> DataFrame:
     """Fold the flat form → (subj, pred, obj, confidence, n_context,
     context_keys: array<bigint>).
@@ -209,10 +159,6 @@ def triples_with_context(
        chunks table — the normalized/dictionary-encoded layout every
        columnar store uses.  chunk_key collisions: ~n²/2⁶⁴, negligible
        below ~10¹⁰ chunks per graph.
-
-    `max_context` truncates the (sorted) key list for hot pairs — the
-    web-scale cap; None preserves exact reference semantics.  n_context
-    always counts the FULL context set (pre-cap).
     """
     folded = (
         triple_mentions
@@ -222,14 +168,11 @@ def triples_with_context(
         .groupBy("subj", "pred", "obj")
         .agg(F.sort_array(F.collect_set("chunk_key")).alias("context_keys"))
     )
-    ctx = F.col("context_keys")
-    if max_context is not None:
-        ctx = F.slice(ctx, 1, max_context)
     return folded.select(
         "subj", "pred", "obj",
         F.lit(float(cfg.relationship_confidence)).alias("confidence"),
         F.size("context_keys").alias("n_context"),
-        ctx.alias("context_keys"),
+        "context_keys",
     )
 
 

@@ -41,12 +41,11 @@ def process_increment(
     chunks = chunking.chunk_documents(docs, cfg).persist()
     # same shuffle-free bundle path as the batch pipeline: entity arrays
     # + predicate flags in one Arrow pass, pairs expanded map-side
-    bundles = extraction.extract_chunk_bundles(
-        chunks, cfg, extra=tmod.context_flag_columns()).persist()
+    bundles = extraction.extract_chunk_bundles(chunks, cfg).persist()
     ce = extraction.chunk_entities_from_bundles(bundles)
     entities = extraction.entities_table(ce)
     mentions = extraction.mentions_table(ce)
-    flat = tmod.emit_triple_mentions_from_bundles(bundles, cfg)
+    flat = tmod.emit_triple_mentions_from_bundles(bundles)
 
     counts = {}
     for name, df in (("chunks", chunks), ("entities", entities),

@@ -147,14 +147,13 @@ def test_no_entity_below_confidence_threshold(result):
 
 
 def test_bundle_pair_emission_is_shuffle_free(result):
-    """The bundle triple path (extract_chunk_bundles with flag
-    passthrough → emit_triple_mentions_from_bundles) must reach pairs
-    with ZERO Exchange: one MapInPandas for extraction, then pure
-    codegen generators.  This is the stage's load-bearing claim — the
-    classic path pays two sort-merge exchanges plus a flags join."""
+    """The triple path (extract_chunk_bundles → emit_triple_mentions_
+    from_bundles) must reach pairs with ZERO Exchange: one MapInPandas
+    for extraction, then pure codegen generators.  This is the stage's
+    load-bearing claim — a self-join on chunk_id would pay two
+    sort-merge exchanges plus a join to bring the context flags back."""
     from graphrag_rs_spark.stages import triples as tmod
-    bundles = extraction.extract_chunk_bundles(
-        result.chunks, DEFAULT_CONFIG, extra=tmod.context_flag_columns())
+    bundles = extraction.extract_chunk_bundles(result.chunks, DEFAULT_CONFIG)
     pairs = tmod.emit_triple_mentions_from_bundles(bundles)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     # tree text prints downstream operators ABOVE the first MapInPandas
@@ -167,19 +166,19 @@ def test_bundle_pair_emission_is_shuffle_free(result):
     assert "BatchEvalPython" not in plan       # no row-at-a-time Python
 
 
-def test_bundle_path_matches_classic_path(result):
-    """Row-identical (chunk_id, subj, pred, obj) bags from the bundle
-    expansion and the original self-join emission."""
-    from graphrag_rs_spark.stages import triples as tmod
-    ce = extraction.extract_chunk_entities(result.chunks, DEFAULT_CONFIG)
-    classic = tmod.emit_triple_mentions(ce, result.chunks, DEFAULT_CONFIG)
-    bundles = extraction.extract_chunk_bundles(
-        result.chunks, DEFAULT_CONFIG, extra=tmod.context_flag_columns())
-    new = tmod.emit_triple_mentions_from_bundles(bundles)
-    cols = ["chunk_id", "subj", "pred", "obj"]
-    a = sorted(map(tuple, classic.select(*cols).collect()))
-    b = sorted(map(tuple, new.select(*cols).collect()))
-    assert a == b and len(a) > 0
+def test_raw_triple_contexts_match_oracle(result, tiny_oracle):
+    """Per-chunk pair emission against the independent oracle: every
+    raw triple's decoded context chunks equal the oracle's, and the flat
+    mention stream holds exactly one row per (triple, context chunk)."""
+    from graphrag_rs_spark.stages.triples import decode_context
+    decoded = decode_context(result.triples, result.chunks)
+    got = {(r["subj"], r["pred"], r["obj"]): list(r["context_chunks"])
+           for r in decoded.collect()}
+    want = {(t["subj"], t["pred"], t["obj"]): sorted(t["context_chunks"])
+            for t in tiny_oracle.triples}
+    assert got == want and got
+    assert result.triple_mentions.count() == sum(
+        len(t["context_chunks"]) for t in tiny_oracle.triples)
 
 
 def test_fold_over_raw_rewrite_equals_fold_over_distinct(result):

@@ -134,10 +134,9 @@ def main() -> int:
         "codegen.", trim(p)))
 
     # 5b. bundle triple path: extraction → ordered pairs with ZERO
-    # shuffles (the round-3 rewrite of the pair self-join)
+    # shuffles
     from graphrag_rs_spark.stages import triples as tmod
-    bundles = extraction.extract_chunk_bundles(
-        chunks, DEFAULT_CONFIG, extra=tmod.context_flag_columns())
+    bundles = extraction.extract_chunk_bundles(chunks, DEFAULT_CONFIG)
     p = plan_of(tmod.emit_triple_mentions_from_bundles(bundles))
     check("bundle pairs: zero Exchange downstream of extraction",
           "Exchange" not in p.split("MapInPandas")[0],
@@ -160,8 +159,8 @@ def main() -> int:
         "Per-chunk entity arrays (with predicate context flags riding "
         "through the Arrow batch) expand to ordered pairs via two chained "
         "posexplode generators over a slimmed (id, type, offset) copy — "
-        "zero Exchange where the classic path paid two sort-merge "
-        "shuffles plus a flags join.", trim(p)))
+        "zero Exchange, where a self-join on chunk_id would pay two "
+        "sort-merge shuffles plus a flags join.", trim(p)))
 
     # 6. canonical pipeline communities input: repartition before the
     # wide distinct (the GC-collapse fix)
@@ -276,7 +275,9 @@ def main() -> int:
     SECTIONS.append((
         "kg_sql_triples — dictionary-NER → triples → canonical rewrite",
         "The whole SQL-expressible flagship path is one JVM plan: "
-        "broadcast lexicon NER, co-occurrence self-join with the "
+        "broadcast lexicon NER, one chunk_id shuffle regrouping the "
+        "exploded NER rows into sorted per-chunk bundles beside the "
+        "context flags, the pipeline's posexplode pair emitter with the "
         "predicate when-chain, CC closure (driver fast path at this "
         "scale), and the capped alias-map broadcast rewrite "
         "(hot top-K broadcast; cold tail unhinted for AQE — see "
@@ -837,25 +838,24 @@ def main() -> int:
 
     # round-5: the composed transcript chain — the north-rule prefix
     p = plan_of(q["kg_sql_transcript_triples"](spark, sf_dir))
-    # the pair emission self-joins the extractor output, so the
-    # chunker+extractor subtree appears once per join side in this
-    # contract query's plan (the real pipeline materializes
-    # chunk_entities once via stage checkpointing); the invariant that
-    # matters is Arrow-batched-only Python and no cartesian blowup
+    # pairs expand from the extractor's own bundles, so the plan holds
+    # exactly two Arrow passes — the chunker and ONE extractor — with
+    # no row-at-a-time Python and no cartesian blowup
     n_nodes = len(set(re.findall(r"\(\d+\) MapInPandas", p)))
     check("transcript chain: Python is Arrow-batched MapInPandas only",
-          n_nodes >= 2 and "BatchEvalPython" not in p,
-          f"distinct MapInPandas nodes={n_nodes}")
+          n_nodes == 2 and "BatchEvalPython" not in p,
+          f"distinct MapInPandas nodes={n_nodes} (want chunker + "
+          "extractor, once each)")
     check("transcript chain: no cartesian products",
           "CartesianProduct" not in p, "")
     SECTIONS.append((
         "kg_sql_transcript_triples — composed north-rule chain",
         "Seeded transcripts through the REAL assembly (one conv_id "
         "shuffle + in-aggregate sort), the REAL chunker and extractor "
-        "(the chain's only Python, both Arrow-batched; the subtree "
-        "appears once per side of the pair self-join here — the real "
-        "pipeline checkpoints chunk_entities so it executes once), "
-        "pair emission and rule typing in codegen, one rollup shuffle. "
+        "(the chain's only Python, both Arrow-batched, each once: "
+        "pairs expand map-side from the extractor's bundles as in the "
+        "pipeline), pair emission and rule typing in codegen, one "
+        "rollup shuffle. "
         "The 100 TB shape: Python touches each byte a bounded number "
         "of times, everything else is JVM.", trim(p)))
 

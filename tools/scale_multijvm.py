@@ -11,12 +11,13 @@ in that shape, deliberately removing the shared-JVM GC/memory-bus
 conflation that single-process local[N] thread scaling suffers from
 (BENCH.md "Two findings" section):
 
-  leg A (N = 1 executor):  1 × spark-submit local[4] over shard_0
+  leg A (N = 1 executor):  1 × spark-submit local[4] over its own
+                            shard (seed 46)
   leg B (4N = 4 executors): 4 × concurrent spark-submit local[4],
                             each over its own statistically identical,
                             disjoint shard (seeds 42-45 — separate
-                            files, so no page-cache sharing flatters
-                            leg B)
+                            files, none read by leg A, so no page-cache
+                            sharing flatters leg B)
 
 Every JVM runs the identical full indexing pipeline on an identical
 workload, so per-executor efficiency is simply
@@ -46,7 +47,10 @@ Two runner modes, because they answer different questions:
              conv-hash quarter of the 8.57M-turn dataset — compute
              dominates wall, so per-executor efficiency measures the
              actual engine, not the orchestration.  This is the
-             authoritative number.
+             authoritative number.  The four quarters ARE the corpus,
+             so there is no spare shard: leg A reads quarter 0, and
+             leg B's first JVM may then find that file page-cache-warm
+             (the other three read cold).
 """
 
 from __future__ import annotations
@@ -67,7 +71,7 @@ CONVS = int(os.environ.get("SPARK_GRAFT_SCALE_CONVS", "250000"))
 DRIVER_MEM = os.environ.get("SPARK_GRAFT_SCALE_MEM", "16g")
 
 
-def _spin(seconds: float = 2.0) -> float:
+def _spin() -> float:
     """Fixed-work pure-CPU spin; returns wall seconds for the fixed work
     (higher = less host capacity delivered right now)."""
     t0 = time.time()
@@ -77,15 +81,20 @@ def _spin(seconds: float = 2.0) -> float:
     return round(time.time() - t0, 3)
 
 
-def _shards() -> list[str]:
+def _shards() -> tuple[str, list[str]]:
+    """(solo shard, quad shards): N_JVMS + 1 disjoint generated files,
+    the last one read only by the solo leg, so no quad-leg JVM reads a
+    file the solo leg left page-cache-warm."""
     from graphrag_rs_spark.datagen import ensure_transcripts
-    return [ensure_transcripts(CONVS, max_turns=120, seed=42 + q)
-            for q in range(N_JVMS)]
+    paths = [ensure_transcripts(CONVS, max_turns=120, seed=42 + q)
+             for q in range(N_JVMS + 1)]
+    return paths[N_JVMS], paths[:N_JVMS]
 
 
-def _quarter_shards() -> list[str]:
-    """Disjoint conv-hash quarters of ONE 2M-conv dataset — real shards
-    of a single corpus (what a 4-executor cluster would scan-split)."""
+def _quarter_shards() -> tuple[str, list[str]]:
+    """(solo shard, quad shards) from disjoint conv-hash quarters of ONE
+    2M-conv dataset — real shards of a single corpus (what a 4-executor
+    cluster would scan-split); the solo leg reuses quarter 0."""
     import duckdb
     from graphrag_rs_spark.datagen import ensure_transcripts
     src = ensure_transcripts(2_000_000, max_turns=120, seed=42)
@@ -98,7 +107,7 @@ def _quarter_shards() -> list[str]:
                     f"where hash(conv_id) % {N_JVMS} = {q}) "
                     f"to '{p}' (format parquet)")
         paths.append(p)
-    return paths
+    return paths[0], paths
 
 
 def _child_inprocess(shard: str) -> None:
@@ -174,17 +183,17 @@ def main() -> None:
         return
     inproc = "--inprocess" in sys.argv
     if inproc:
-        shards = _quarter_shards()
+        solo_shard, shards = _quarter_shards()
         runner = _submit_inprocess
     else:
-        shards = _shards()
+        solo_shard, shards = _shards()
         runner = _submit
     result: dict = {"threads_per_jvm": THREADS_PER_JVM, "n_jvms": N_JVMS,
                     "mode": "inprocess" if inproc else "spark-submit",
                     "convs_per_shard": CONVS, "driver_mem": DRIVER_MEM}
 
     result["cal_before_solo"] = _spin()
-    solo = runner(shards[0], "solo")
+    solo = runner(solo_shard, "solo")
     result["cal_after_solo"] = _spin()
     result["solo"] = solo
     result["solo_turns_per_sec"] = round(solo["turns"] / solo["wall"], 1)
